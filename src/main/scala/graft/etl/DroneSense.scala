@@ -11,8 +11,10 @@ import org.apache.spark.sql.types._
   * Re-expresses the reference connector's record loop (task.ts:123-214) as
   * ONE declarative column transform — `struct`/`array`/`when` plus
   * higher-order array functions — so the whole pipeline is a single
-  * narrow-dependency projection: no shuffle, fully codegen'd, trivially
-  * parallel at any scale. Fidelity subtleties preserved (SURVEY.md §7.5):
+  * narrow-dependency projection. An in-memory payload ([[parseJson]]) is
+  * decoded and transformed on the driver through `LocalRelation` folding,
+  * with no Spark job; [[readJson]] and [[streamFromJsonDir]] inputs stay
+  * distributed. Fidelity subtleties preserved (SURVEY.md §7.5):
   *
   *  - a sensor qualifies for video only when `rtsp_url` is non-null AND
   *    non-empty (JS falsiness, task.ts:146), and only the FIRST qualifying
@@ -59,11 +61,11 @@ object DroneSense {
   def readJson(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(droneSchema).option("multiLine", value = true).json(path)
 
-  /** Parse an in-memory JSON payload (e.g. fetched by [[HttpJson]]).
-    * A malformed payload FAILS LOUDLY: `from_json` alone would return
-    * null → explode to zero rows, i.e. silent data loss on a corrupt
-    * upstream response (the reference's `.typed` also throws,
-    * task.ts:119-121).
+  /** Parse an in-memory JSON payload (e.g. fetched by [[HttpJson]]) on
+    * the driver into a `LocalRelation` ([[HttpJson.parseArray]]).
+    * A malformed payload FAILS LOUDLY instead of yielding zero rows, i.e.
+    * silent data loss on a corrupt upstream response (the reference's
+    * `.typed` also throws, task.ts:119-121).
     */
   def parseJson(spark: SparkSession, payload: String): DataFrame =
     parseJson(spark, payload, verbose = false, log = defaultLog)
@@ -77,31 +79,21 @@ object DroneSense {
     */
   def parseJson(spark: SparkSession, payload: String, verbose: Boolean,
                 log: String => Unit): DataFrame = {
-    import spark.implicits._
     // The declared relation is an ARRAY of records (task.ts:119).
-    // from_json would silently wrap a single JSON object into a
-    // one-element array, so the shape is asserted explicitly.
-    if (!payload.trim.startsWith("[")) {
-      throw new IllegalArgumentException(
-        s"malformed DroneSense payload (not a JSON array): ${payload.take(120)}")
-    }
-    val parsed = spark.createDataset(Seq(payload))
-      .select(from_json(col("value"), ArrayType(droneSchema)).as("arr"))
-    if (parsed.filter(col("arr").isNull).limit(1).count() > 0) {
-      throw new IllegalArgumentException(
-        s"malformed DroneSense payload (unparseable JSON): ${payload.take(120)}")
-    }
-    // One top-level array → explode to one record per row, then decode.
-    val records = parsed.select(explode(col("arr")).as("r")).select(col("r.*"))
+    val records = HttpJson.parseArray(spark, payload, droneSchema)
     if (verbose) {
-      // "Print results in logs" (task.ts:80). Driver-side and bounded:
-      // a count plus a record sample, never an unbounded collect.
-      val sample = records.limit(3).toJSON.collect()
+      // "Print results in logs" (task.ts:80): a bounded record sample.
+      val sample = jsonLines(records.limit(3))
       log(s"[dronesense] decoded payload sample (${sample.length} shown):\n" +
         sample.mkString("\n"))
     }
     records
   }
+
+  /** `toJSON` as a projection, which folds over a `LocalRelation` where
+    * `toJSON` (a `MapPartitions`) always starts a job. */
+  private def jsonLines(df: DataFrame): Array[String] =
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0))
 
   private def defaultLog: String => Unit =
     org.apache.logging.log4j.LogManager.getLogger(getClass).info(_)
@@ -109,7 +101,7 @@ object DroneSense {
   /** The reference's `control()` end-to-end (task.ts:104-217): resolve
     * env, GET the drones-with-sensors endpoint with the token header,
     * strictly decode (verbose when `env.debug`), validate, transform to
-    * CoT features. The returned frame is distributed; pair with
+    * CoT features. The returned frame is driver-local; pair with
     * [[toFeatureCollectionJson]] + [[HttpJson.sink]] for the submit half.
     */
   def fromApi(spark: SparkSession, url: String, env: Environment,
@@ -124,8 +116,8 @@ object DroneSense {
   def validate(df: DataFrame): DataFrame = {
     val required = droneSchema.fields.filterNot(_.nullable).map(_.name)
     val anyNull = required.map(col(_).isNull).reduce(_ || _)
-    // One job: collect up to 5 offenders and branch on emptiness.
-    val sample = df.filter(anyNull).limit(5).toJSON.collect()
+    // Collect up to 5 offenders and branch on emptiness.
+    val sample = jsonLines(df.filter(anyNull).limit(5))
     if (sample.nonEmpty) {
       throw new IllegalArgumentException(
         s"DroneSense payload failed schema validation; sample offenders:\n${sample.mkString("\n")}")
@@ -214,12 +206,11 @@ object DroneSense {
   }
 
   /** Materialise a GeoJSON FeatureCollection string — the sink-side
-    * serialisation (task.ts:107-110, 216). Only the sink collects; the
-    * transform itself stays distributed. Empty input still yields a valid
-    * empty collection.
+    * serialisation (task.ts:107-110, 216). Only the feature strings are
+    * collected. Empty input still yields a valid empty collection.
     */
   def toFeatureCollectionJson(features: DataFrame): String = {
-    val rows = features.toJSON.collect()
+    val rows = jsonLines(features)
     rows.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
   }
 

@@ -4,7 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructType}
 
@@ -12,9 +12,11 @@ import org.apache.spark.sql.types.{ArrayType, StructType}
   * (GET task.ts:112-117; POST task.ts:216), kept OUT of the correctness
   * harness (no network there — SURVEY.md §7.1 phase 4).
   *
-  * Source: one GET = one full snapshot of the relation, fetched
-  * driver-side and parallelised immediately — the honest Spark shape for
-  * an API that returns a single JSON array. The partitioned escalation
+  * Source: one GET = one full snapshot of the relation, fetched and
+  * decoded on the driver into a `LocalRelation` ([[parseArray]]), so the
+  * row-local plans built on it (validate, transform, serialize) fold in
+  * the optimizer and run no Spark job — the honest shape for an API that
+  * returns a single small JSON array. The partitioned escalation
   * for offset-capable APIs is [[graft.sources.HttpTableProvider]]
   * (`spark.read.format("graft-http")` — N executors page in parallel);
   * for file-shaped inputs `spark.read.json/parquet` already scales.
@@ -33,23 +35,30 @@ object HttpJson {
   private def client: HttpClient =
     HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(30)).build()
 
-  /** Decode a JSON-array payload against an explicit row `schema` —
-    * shape-guarded like [[DroneSense.parseJson]] (a non-array or
-    * unparseable payload throws instead of silently yielding 0 rows).
+  /** Decode a JSON-array payload against a row `schema` on the driver —
+    * the one decoder for in-memory payloads. A non-array or unparseable
+    * payload throws instead of silently yielding 0 rows. The result is a
+    * `LocalRelation`, so row-local plans over it (filters, projections,
+    * `to_json`) fold in the optimizer and start no job. Its rows carry
+    * the decoded, all-nullable element type, not `schema`: non-nullable
+    * fields would let the optimizer fold `isNull` checks to `false`.
     */
   def parseArray(spark: SparkSession, payload: String, schema: StructType): DataFrame = {
     import spark.implicits._
-    if (!payload.trim.startsWith("[")) {
+    if (!payload.trim.startsWith("[")) { // from_json wraps a lone object
       throw new IllegalArgumentException(
         s"payload is not a JSON array: ${payload.take(120)}")
     }
+    // a projection of a one-row local Dataset: the collect runs no job
     val parsed = spark.createDataset(Seq(payload))
       .select(from_json(col("value"), ArrayType(schema)).as("arr"))
-    if (parsed.filter(col("arr").isNull).limit(1).count() > 0) {
+    val arr = parsed.collect().head
+    if (arr.isNullAt(0)) {
       throw new IllegalArgumentException(
         s"unparseable JSON payload: ${payload.take(120)}")
     }
-    parsed.select(explode(col("arr")).as("r")).select(col("r.*"))
+    val ArrayType(elem: StructType, _) = parsed.schema("arr").dataType
+    spark.createDataFrame(arr.getList[Row](0), elem)
   }
 
   /** GET `url` with the given headers, returning the raw body — the

@@ -158,10 +158,14 @@ object BpeTrain {
     * is the textbook left-to-right scan ([[referenceEncode]]'s exact
     * loop; BpeSpec pins equality, and the relational [[applyMerge]]
     * was itself spec-pinned to the same reference).
+    *
+    * Precondition: `words.w` holds DISTINCT, NON-NULL words — the output
+    * has one row per input row, so a repeated word is encoded (and later
+    * joined) once per repeat. A null word gets a null `n_bpe`.
     */
   def encodeWords(words: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     val bc = words.sparkSession.sparkContext.broadcast(merges.toArray)
-    val nBpe = udf { (w: String) =>
+    val nBpe = udf { (word: String) => Option(word).map { w =>
       var toks: Vector[String] = w.map(_.toString).toVector
       bc.value.foreach { case (l, r) =>
         val out = scala.collection.mutable.ArrayBuffer[String]()
@@ -174,7 +178,7 @@ object BpeTrain {
         toks = out.toVector
       }
       toks.length.toLong
-    }
+    } }
     words.select(col("w"), nBpe(col("w")).as("n_bpe"))
   }
 

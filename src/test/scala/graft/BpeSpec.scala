@@ -94,6 +94,12 @@ class BpeSpec extends AnyFunSuite {
     // the merges actually compressed something — not a vacuous identity
     assert(got.exists { case (w, n) => n < w.length },
       "no word compressed below its character count — vacuous merges")
+    // a null word encodes to a null count, not an NPE
+    val withNull = BpeTrain.encodeWords(Seq[String]("ab", null).toDF("w"), merges)
+      .collect().map(r => Option(r.getString(0)) -> Option(r.get(1))).toMap
+    assert(withNull(None).isEmpty)
+    assert(withNull(Some("ab")) ==
+      Some(BpeTrain.referenceEncode(Seq("ab"), merges)("ab").toLong))
   }
 
   test("an exhausted corpus fails loudly instead of under-delivering merges") {

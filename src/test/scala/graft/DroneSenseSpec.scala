@@ -4,9 +4,12 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import graft.etl.DroneSense
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import graft.etl.{DroneSense, HttpJson}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, explode, from_json}
+import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-file parity for the DroneSense→CoT pipeline (SURVEY.md §5.3).
@@ -122,5 +125,86 @@ class DroneSenseSpec extends AnyFunSuite {
     assert(rows("d7").contains("rtsp://cam.example/d7a")) // break after first
     assert(rows("d8").isEmpty)                            // "" is falsy
     assert(rows("d1").isEmpty)                            // no sensors
+  }
+
+  private def fixturePayload: String = scala.io.Source.fromURL(
+    getClass.getResource("/graft/drones.json"), "UTF-8").mkString
+
+  /** Jobs that `body`, run on this thread, starts. Jobs are matched by a
+    * job group, so work other threads start is not counted.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-started-by-${java.util.UUID.randomUUID()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsStartedBy")
+    try { body; ListenerBusDrain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    started.get
+  }
+
+  test("an in-memory invocation starts no Spark job") {
+    var out: String = null
+    assert(jobsStartedBy {
+      out = DroneSense.toFeatureCollectionJson(DroneSense.toCot(
+        DroneSense.validate(DroneSense.parseJson(spark, fixturePayload))))
+    } == 0)
+    assert(mapper.readTree(out).get("features").size == 8)
+    assert(jobsStartedBy {
+      HttpJson.parseArray(spark, fixturePayload, DroneSense.droneSchema)
+    } == 0)
+  }
+
+  /** The `Dataset.toJSON` serializer `toFeatureCollectionJson` used to
+    * have, kept here only as the reference for its replacement.
+    */
+  private def toJsonReference(features: DataFrame): String =
+    features.toJSON.collect()
+      .mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+
+  private def drone(id: String, sensors: String, spoiLat: Double, spoiLng: Double,
+                    longitude: Double = 10.7522): String =
+    s"""[{"id":"$id","callSign":"CS-$id","missionName":"m","model":"x",""" +
+      s""""latitude":59.9139,"longitude":$longitude,"lastUpdate":1.7e12,""" +
+      s""""altitudeAgl":50.0,"altitudeMsl":120.0,"speed":4.5,"heading":90.0,""" +
+      s""""spoiLat":$spoiLat,"spoiLng":$spoiLng,"sensors":$sensors}]"""
+
+  test("toFeatureCollectionJson is byte-identical to the toJSON serializer") {
+    val payloads = Seq(
+      "fixture" -> fixturePayload,
+      "sensors []" -> drone("a", "[]", 59.92, 10.76),
+      "rtsp_url null" -> drone("b",
+        """[{"id":"s0","name":"n","video_url":"http://v/0","rtsp_url":null}]""", 0, 0),
+      "rtsp_url empty" -> drone("c",
+        """[{"id":"s0","name":"n","video_url":"http://v/0","rtsp_url":""}]""", 0, 0),
+      "rtsp_url on the second sensor" -> drone("d",
+        """[{"id":"s0","name":"n"},""" +
+          """{"id":"s1","name":"n","video_url":"http://v/1","rtsp_url":"rtsp://r/1"}]""",
+        59.92, 10.76),
+      "SPOI zero" -> drone("e", "[]", 0, 0),
+      "SPOI nonzero" -> drone("f", "[]", 59.92, 10.76),
+      "SPOI across the antimeridian" -> drone("g", "[]", -16.93, -179.9, longitude = 179.9),
+      "empty" -> "[]")
+    payloads.foreach { case (name, payload) =>
+      val cot = DroneSense.toCot(DroneSense.validate(DroneSense.parseJson(spark, payload)))
+      assert(DroneSense.toFeatureCollectionJson(cot) == toJsonReference(cot), name)
+    }
+  }
+
+  test("parseJson keeps the schema of the from_json + explode decode") {
+    import spark.implicits._
+    // With droneSchema's non-nullable fields instead, the optimizer would
+    // fold validate's isNull checks to false over the local rows.
+    val exploded = spark.createDataset(Seq(fixturePayload))
+      .select(from_json(col("value"), ArrayType(DroneSense.droneSchema)).as("arr"))
+      .select(explode(col("arr")).as("r")).select(col("r.*"))
+    assert(DroneSense.parseJson(spark, fixturePayload).schema == exploded.schema)
+    assert(DroneSense.parseJson(spark, "[]").schema == exploded.schema)
   }
 }
