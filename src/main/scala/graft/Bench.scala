@@ -43,7 +43,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * unperturbed. A scale-killer (new spill, shuffle-bytes blowup) now
   * shows numerically even when wall-time noise hides it.
   *
-  * Optional args: query names to run (default: all) — local iteration aid.
+  * Optional args: query names to run (default: all) — local iteration aid;
+  * an unknown name fails the run ([[SparkEntry.select]]).
   */
 object Bench {
   /** Per-query executor-metric totals (bytes / counts). */
@@ -108,11 +109,9 @@ object Bench {
     val baselineDir = sys.env.getOrElse("SPARK_GRAFT_BASELINE_SF_DIR", sfDir)
     def dirFor(name: String): String =
       if (SparkEntry.baselineQueries(name)) baselineDir else sfDir
+    val selected = SparkEntry.select(args.toSeq)
     val spark = LocalSession.create("4",
       Map("spark.sql.adaptive.enabled" -> "true"))
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.toSet).toMap
     // Warm-up pass at the smallest SF: whole-stage codegen keys on the
     // generated SOURCE (identical across data dirs for the same plan), so
     // one tiny-data pass populates the Janino cache and JITs the hot
@@ -142,8 +141,7 @@ object Bench {
     // on six alphabetically CONTIGUOUS fn_* queries that read 0.3–0.9 s
     // clean. Sweep-major order (pass 1 over ALL queries, then pass 2)
     // places a query's passes minutes apart: a stall now has to span the
-    // whole bench to survive. SPARK_GRAFT_BENCH_SAMEWINDOW=1 restores the
-    // r6 query-major order for A/B-ing the harness itself.
+    // whole bench to survive.
     val timedRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(_.trim.toIntOption).getOrElse(2).max(1)
     // Execution lane (round-15, verdict #3): BENCH_r14's driver run read
@@ -157,7 +155,6 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_HEAVY_RERUNS")
         .flatMap(_.trim.toIntOption).getOrElse(10)
     else 0
-    val sameWindow = sys.env.get("SPARK_GRAFT_BENCH_SAMEWINDOW").contains("1")
     val order = selected.toSeq.sortBy(_._1)
     def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame,
@@ -186,20 +183,13 @@ object Bench {
     // One explicit GC between sweeps / before a retry pass releases the
     // finished generation; it runs OUTSIDE any timed window.
     def releaseShuffles(): Unit = { System.gc(); Thread.sleep(200) }
+    val sweeps = (1 to timedRuns).map { i =>
+      if (i > 1) releaseShuffles()
+      order.map { case (n, fn) => timeOne(n, fn, i == 1) }
+    }
     val passes: Map[String, Seq[(Double, Boolean)]] =
-      if (sameWindow)
-        order.map { case (n, fn) =>
-          n -> (1 to timedRuns).map { i =>
-            if (i > 1) releaseShuffles()
-            timeOne(n, fn, i == 1) } }.toMap
-      else {
-        val sweeps = (1 to timedRuns).map { i =>
-          if (i > 1) releaseShuffles()
-          order.map { case (n, fn) => timeOne(n, fn, i == 1) }
-        }
-        order.map(_._1).zipWithIndex
-          .map { case (n, i) => n -> sweeps.map(_(i)) }.toMap
-      }
+      order.map(_._1).zipWithIndex
+        .map { case (n, i) => n -> sweeps.map(_(i)) }.toMap
     // Contention retry (round-10 lesson): BENCH_r09's driver total read
     // 168.9 s where the same commit benched 113.4 s quiet — pure machine
     // contention, spread across queries. When a query's two sweep passes

@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One bootstrap for every driver/diagnostic main (Verify, Bench,
-  * PlanDump, ScaleUp, the Sweep/Profile/RowCount probes): local master
-  * sized by SPARK_GRAFT_CPUS, shuffle partitions matched to cores, UTC,
-  * no UI, WARN logs. Each main previously copied this block and the
-  * copies had already drifted (SweepIvf lost the UTC timezone, only
-  * ScaleUp carried the nanos conf) — a config tweak must land in exactly
-  * one place.
+/** One bootstrap for the four mains (Verify, Bench, PlanDump, ScaleUp):
+  * local master sized by SPARK_GRAFT_CPUS, shuffle partitions matched to
+  * cores, UTC, no UI, WARN logs — a config tweak lands in exactly one
+  * place. Any other Spark conf reaches the builder as a `spark.*` JVM
+  * system property (`set javaOptions += "-Dspark.…"` in sbt), so a conf
+  * A/B needs no flag of its own.
   */
 object LocalSession {
   def create(defaultCpus: String = "32",

@@ -47,6 +47,19 @@ object SparkEntry {
         })
       )
 
+  /** The registry rows a main runs: every query when `names` is empty,
+    * else exactly the named ones. An unknown name throws instead of
+    * being filtered away — a run whose only names are typos must not
+    * report success over zero queries.
+    */
+  def select(names: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val unknown = names.filterNot(all.keySet).distinct.sorted
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown query name(s): ${unknown.mkString(", ")} — not in SparkEntry.queries")
+    if (names.isEmpty) all else all.view.filterKeys(names.toSet).toMap
+  }
+
   /** Declared ORACLE-BASELINE queries: quadratic/all-pairs forms kept
     * deliberately as the oracle-checkable contract surface, each with a
     * plan-gated scale sibling that runs the same contract at production

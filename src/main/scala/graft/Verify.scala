@@ -6,20 +6,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing query names: dump only those (iteration aid —
-    // the driver always runs the full surface). Unknown names FAIL
-    // FAST: filterKeys silently dropped typos, so a run with only
-    // misspelled names printed a success-looking "0/0 dumped" line for
-    // a run that verified nothing (ADVICE r13).
-    val unknown = args.drop(2).filterNot(SparkEntry.queries.keySet)
-    if (unknown.nonEmpty) {
-      System.err.println(
-        s"[verify] unknown query name(s): ${unknown.sorted.mkString(", ")} " +
-          "— not in SparkEntry.queries")
-      sys.exit(2)
-    }
+    // a full run covers every query)
     val selected =
-      if (args.length <= 2) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.drop(2).toSet).toMap
+      try SparkEntry.select(args.drop(2).toSeq)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[verify] ${e.getMessage}")
+        sys.exit(2)
+      }
     val spark = LocalSession.create("4")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -113,25 +113,6 @@ object Ann {
       .select(col("qid"), col("rn"), col("vec_id"), col("c"))
   }
 
-  /** Per-query distinct-candidate count — the measured cost side of the
-    * tables × planes dial: exactly the pairs [[lshTopK]] scores (same
-    * bucket join, same self-exclusion, same dedup across tables).
-    */
-  def candidateStats(queries: DataFrame, data: DataFrame,
-                     tables: Int = 16, planesPerTable: Int = 5, dim: Int = 64,
-                     seed: Long = 42L, nprobe: Int = 0): DataFrame = {
-    val qk = if (nprobe > 0)
-      probedBucketKeys(queries, tables, planesPerTable, dim, seed, nprobe)
-    else bucketKeys(queries, tables, planesPerTable, dim, seed)
-    val qb = qk.select(col("vec_id").as("qid"), col("table"), col("bucket"))
-    val db = bucketKeys(data, tables, planesPerTable, dim, seed)
-      .select(col("vec_id"), col("table"), col("bucket"))
-    qb.join(db, Seq("table", "bucket"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id")).distinct()
-      .groupBy(col("qid")).agg(count(lit(1)).as("n_candidates"))
-  }
-
   /** LSH top-k: compare each query only against same-bucket candidates
     * from any of the L tables. `nprobe > 0` adds multi-probe on the query
     * side ([[probedBucketKeys]]) — recall of a much larger table count at

@@ -102,8 +102,8 @@ object BloomDedup {
   }
 
   /** The probe half alone, over a prebuilt filter — ONE definition of
-    * the broadcast-map probe, shared with `SweepBloom` so the sweep
-    * measures exactly the operator's semantics. The broadcast lives
+    * the broadcast-map probe, so a test of the probe checks exactly the
+    * operator's semantics (Extra4Spec). The broadcast lives
     * until the context cleaner collects it; materialize-then-destroy
     * callers use [[probeWithHandle]].
     */

@@ -53,8 +53,8 @@ object BpeTrain {
     * Fails loudly if the corpus exhausts before `merges` rounds (no
     * adjacent pair left — a fixture problem, not a data condition to
     * silently absorb). `roundHook`, when set, receives (step, state
-    * rows after the merge) — the SweepBpe measurement seam for the
-    * state-shrinks-per-round claim; the count reads the freshly
+    * rows after the merge) — the measurement seam for the
+    * state-shrinks-per-round claim (BpeSpec); the count reads the freshly
     * snapped blocks, so it costs one cached scan per round and nothing
     * when unset.
     */

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{bit_xor, coalesce, col, count, lit, xxhash64}
 
 /** Release discipline for iterative DataFrame-resident state.
   *
@@ -34,6 +35,21 @@ object Checkpoints {
   def snap(df: DataFrame): (DataFrame, DataFrame) = {
     val chk = df.localCheckpoint()
     (chk.sparkSession.createDataFrame(chk.rdd, chk.schema), chk)
+  }
+
+  /** Order-independent one-row digest of `df` over `cols`: (row count,
+    * bit_xor of per-row xxhash64), computed by one map-side-combining
+    * agg job — no shuffle of the data itself. bit_xor (not sum) because
+    * ANSI mode makes `sum(BIGINT)` overflow an error, while xor is
+    * closed, commutative and order-independent. The iterative
+    * operators' convergence gate: differing digests prove two rounds'
+    * states differ; equal ones must still be confirmed exactly.
+    */
+  def fingerprint(df: DataFrame, cols: String*): (Long, Long) = {
+    val r = df.agg(
+      count(lit(1)).as("n"),
+      coalesce(bit_xor(xxhash64(cols.map(col): _*)), lit(0L)).as("x")).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Free a superseded checkpoint's blocks. The contract is enforced

@@ -15,19 +15,11 @@ import org.apache.spark.sql.functions._
   * Components in MapReduce and Beyond"), which squares the paths per
   * round. Every round localCheckpoints: iterative plans otherwise stack
   * lineage until the optimizer chokes — the standard Spark iterative-
-  * algorithm discipline.
+  * algorithm discipline — and the superseded round's checkpoint is freed
+  * ([[Checkpoints.free]]) once the convergence check has read it, so a
+  * call leaves exactly one checkpoint resident: the one its result reads.
   */
 object ConnectedComponents {
-  /** Rounds the last [[components]]/[[componentsStar]] call took to
-    * converge — diagnostic only (read by ProfileCc / PERF.md notes).
-    */
-  @volatile private[graft] var lastRounds: Int = 0
-
-  /** (v, c): component label c = min vertex id reachable from v.
-    * `edges` must have columns (src, dst); the graph is treated as
-    * undirected; isolated vertices don't appear (join the vertex set
-    * back if they must).
-    */
   /** The ONE cluster-output projection shared by `dedup_cluster` and
     * `dedup_minhash_cluster` (their equality test depends on both using
     * the same canonical-doc rule): component label → cluster id, the
@@ -81,7 +73,7 @@ object ConnectedComponents {
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
     var round = 0
     var converged = false
-    var eFp = fingerprint(e, "src", "dst")
+    var eFp = Checkpoints.fingerprint(e, "src", "dst")
     while (!converged && round < maxIterations) {
       val next = smallStar(largeStar(e)).localCheckpoint()
       // Converged when the star set is stable (same canonical edge set).
@@ -91,13 +83,13 @@ object ConnectedComponents {
       // agg job): differing fingerprints prove the sets differ and skip
       // the expensive check; equal fingerprints are confirmed exactly, so
       // a collision can never yield a wrong result, only one extra check.
-      val nextFp = fingerprint(next, "src", "dst")
+      val nextFp = Checkpoints.fingerprint(next, "src", "dst")
       converged = nextFp == eFp && next.except(e).limit(1).count() == 0
+      Checkpoints.free(e)
       e = next
       eFp = nextFp
       round += 1
     }
-    lastRounds = round
     // stars are (child → root); roots label themselves
     val children = e.select(col("src").as("v"), col("dst").as("c"))
     val roots = e.select(col("dst").as("v")).distinct()
@@ -105,19 +97,11 @@ object ConnectedComponents {
     children.union(roots).distinct()
   }
 
-  /** Order-independent one-row digest of a 2-column frame: (row count,
-    * bit_xor of per-row xxhash64). Computed with one map-side-combining
-    * agg job — no shuffle of the data itself. bit_xor (not sum) because
-    * ANSI mode makes `sum(BIGINT)` overflow an error, while xor is
-    * closed, commutative, and order-independent.
+  /** (v, c): component label c = min vertex id reachable from v.
+    * `edges` must have columns (src, dst); the graph is treated as
+    * undirected; isolated vertices don't appear (join the vertex set
+    * back if they must).
     */
-  private def fingerprint(df: DataFrame, a: String, b: String): (Long, Long) = {
-    val r = df.agg(
-      count(lit(1)).as("n"),
-      coalesce(bit_xor(xxhash64(col(a), col(b))), lit(0L)).as("x")).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   def components(edges: DataFrame, maxIterations: Int = 20): DataFrame = {
     // Round-19 (guide §2.4): checkpoint the symmetrized edge relation
     // PRE-PARTITIONED on dst — the per-round propagate join's key.
@@ -135,7 +119,7 @@ object ConnectedComponents {
       .localCheckpoint()
     var round = 0
     var converged = false
-    var labelsFp = fingerprint(labels, "v", "c")
+    var labelsFp = Checkpoints.fingerprint(labels, "v", "c")
     while (!converged && round < maxIterations) {
       val viaNbr = sym.join(labels, sym("dst") === labels("v"))
         .groupBy(col("src")).agg(min(col("c")).as("nc"))
@@ -145,18 +129,20 @@ object ConnectedComponents {
         .localCheckpoint()
       // Same fingerprint gate as componentsStar: only run the exact
       // changed-rows join when the one-row digest says "maybe equal".
-      val nextFp = fingerprint(next, "v", "c")
+      val nextFp = Checkpoints.fingerprint(next, "v", "c")
       converged = nextFp == labelsFp && {
         next.alias("n")
           .join(labels.alias("o"), col("n.v") === col("o.v"))
           .filter(col("n.c") =!= col("o.c"))
           .limit(1).count() == 0
       }
+      Checkpoints.free(labels)
       labels = next
       labelsFp = nextFp
       round += 1
     }
-    lastRounds = round
+    // every round's labels are checkpointed, so nothing reads `sym` now
+    Checkpoints.free(sym)
     labels
   }
 }

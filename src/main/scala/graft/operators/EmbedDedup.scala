@@ -73,8 +73,8 @@ import org.apache.spark.sql.functions._
   * degenerate cell (duplicate-heavy corpora collapse into few cells)
   * goes quadratic. Cells above `maxCellSize` are dropped WHOLE
   * (truncating would be partition-order-dependent — the
-  * [[MinHash.lshCandidates]] rule) and [[droppedCells]] reports how
-  * many; recall loss is confined to pairs inside oversized cells.
+  * [[MinHash.lshCandidates]] rule); recall loss is confined to pairs
+  * inside oversized cells.
   *
   * Measured dial guidance (SweepEmbedDedup at the 200k-vector 100×
   * dial, θ=0.45, PERF.md round-12 addendum): on the ADVERSARIAL
@@ -383,16 +383,6 @@ object EmbedDedup {
       .select(col("corpus_id"), col("eval_id"), col("c"))
       .dropDuplicates("corpus_id", "eval_id")
   }
-
-  /** Number of cells the `maxCellSize` cap removes — observability for
-    * the recall/cost trade (the [[MinHash.droppedBuckets]] analogue).
-    */
-  def droppedCells(vecs: DataFrame, nlist: Int = 8, iters: Int = 2,
-                   maxCellSize: Int = 100000, nassign: Int = 2): Long =
-    assignAll(vecs, nlist, iters, nassign)
-      .groupBy(col("cell")).agg(count(lit(1)).as("csz"))
-      .filter(col("csz") > maxCellSize)
-      .count()
 
   /** Full semantic-dedup pipeline: cell pairs → large-star/small-star
     * connected components → (doc_id, cluster_id, is_canonical) labels,

@@ -154,7 +154,7 @@ object Ivf {
     * trade; the fixture-scale dials (sim_ivf specs, nlist ≤ 32) keep the
     * exact flat training bit-for-bit.
     */
-  @volatile private[graft] var coarseTrainThreshold: Int = 4096
+  private val coarseTrainThreshold = 4096
 
   /** One Lloyd step over driver-held centroid arrays: assign to nearest
     * centroid (fused — no join, no shuffle; coarse descent above
@@ -203,7 +203,7 @@ object Ivf {
   }
 
   /** Rounds the last [[centroids]] call actually ran (diagnostic, read
-    * by SweepIvf / PERF.md notes).
+    * by ScaleOpsSpec).
     */
   @volatile private[graft] var lastRounds: Int = 0
 
@@ -327,9 +327,6 @@ object Ivf {
     * the spec's setting). A train row whose probed groups contain no
     * fine cell skips the round, like [[stepArrays]]' null-cell drop.
     */
-  /** Superseded-round checkpoint release — see [[Checkpoints.free]]. */
-  private def freeLocalCheckpoint(df: DataFrame): Unit = Checkpoints.free(df)
-
   def centroidsDF(data: DataFrame, nlist: Int, iters: Int = 8,
                   trainSample: Int = 0, wProbe: Int = 2): DataFrame = {
     val spark = data.sparkSession
@@ -398,7 +395,7 @@ object Ivf {
         // block-manager resident until GC triggers the ContextCleaner,
         // so several rounds coexist (~4 GB each at the 10⁶-cell/512-dim
         // dial), at odds with the O(nlist·d) TOTAL claim (r11 ADVICE).
-        freeLocalCheckpoint(cents)
+        Checkpoints.free(cents)
         cents = next
         converged = changed == 0L
         round += 1
@@ -478,26 +475,6 @@ object Ivf {
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= nprobe)
       .select(col("qid"), col("qe"), col("cell"))
-  }
-
-  /** Per-query candidate-set size at a given (nlist, nprobe) — the cost
-    * side of the recall/cost dial: EXACTLY the vectors [[topK]] scores
-    * (the query's own vector is excluded, as topK excludes it).
-    * Returns (qid, n_candidates). Pass a precomputed (cents, indexed)
-    * pair to measure the SAME index topK used instead of retraining.
-    */
-  def probeStats(queries: DataFrame, data: DataFrame,
-                 nlist: Int = 8, nprobe: Int = 4, iters: Int = 2,
-                 index: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val (cents, indexed) = index.getOrElse {
-      val c = centroids(data, nlist, iters)
-      (c, assign(data, c))
-    }
-    probeCells(queries, cents, nprobe)
-      .join(indexed.select(col("cell"), col("vec_id")), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_candidates"))
   }
 
   /** Per-query top-k over the union of the `nprobe` nearest cells. Pass

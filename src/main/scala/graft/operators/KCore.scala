@@ -57,25 +57,6 @@ import org.apache.spark.storage.StorageLevel
   * (a node outside every edge has core 0 by convention and no row).
   */
 object KCore {
-  /** Eagerly materialize a round's state AND reset its statistics.
-    *
-    * `localCheckpoint` truncates LINEAGE but snapshots the origin
-    * plan's size ESTIMATE into the new leaf, and the convergence diff
-    * references each round's state twice — left to compound, the
-    * snapshot SQUARES round over round: by round ~25 the size-only
-    * stats visitor is multiplying million-digit BigIntegers and the
-    * DRIVER livelocks in Toom-Cook multiplication before any executor
-    * work (observed on the first cut: sf0.1 hung at 100% of one core;
-    * sf0.01 converges in few enough rounds to stay under the blowup).
-    * Wrapping the checkpointed rows in a fresh DataFrame resets the
-    * estimate to the session default, making per-round stats O(plan),
-    * not O(2^round). Returns (wrapped, checkpoint) — the checkpoint
-    * handle is what [[Checkpoints.free]] must release (the wrapper's
-    * leaf is a derived RDD, not the cached blocks).
-    */
-  private def snap(df: DataFrame): (DataFrame, DataFrame) =
-    Checkpoints.snap(df)
-
   /** One h-index step over a symmetrized adjacency: every estimate
     * becomes the h-index of its neighbours' estimates. References
     * `state` exactly once (chaining k steps builds a depth-k plan, not
@@ -149,15 +130,14 @@ object KCore {
     */
   def coreNumbers(edges: DataFrame, maxIterations: Int = 64,
                   stateBroadcastThreshold: Long = 4000000L,
-                  stepsPerRound: Int = 8,
-                  roundHook: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
+                  stepsPerRound: Int = 8): DataFrame = {
     require(stepsPerRound >= 1, s"stepsPerRound must be >= 1: $stepsPerRound")
     // symmetrized adjacency feeds every step → persist once
     val adj = edges.select(col("a").as("v"), col("b").as("n"))
       .unionAll(edges.select(col("b").as("v"), col("a").as("n")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // round 0: estimate = degree (the h-index seed)
-    var (est, estChk) = snap(adj.groupBy(col("v"))
+    var (est, estChk) = Checkpoints.snap(adj.groupBy(col("v"))
       .agg(count(lit(1)).cast("int").as("c")))
     val nNodes = est.count()
     val bcastState = nNodes <= stateBroadcastThreshold
@@ -166,7 +146,7 @@ object KCore {
     while (changed > 0 && round * stepsPerRound < maxIterations) {
       val chained = (1 to stepsPerRound).foldLeft(est)((x, _) =>
         hStep(adj, x, bcastState))
-      val (next, nextChk) = snap(chained)
+      val (next, nextChk) = Checkpoints.snap(chained)
       // monotone decrease makes the diff a plain count; this terminal
       // action references est + next once each and is never chained
       // into lineage
@@ -177,7 +157,6 @@ object KCore {
       est = next
       estChk = nextChk
       round += 1
-      roundHook(round, changed)
     }
     require(changed == 0,
       s"k-core h-index iteration still moving after $maxIterations steps " +

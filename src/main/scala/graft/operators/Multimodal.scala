@@ -473,7 +473,7 @@ object Multimodal {
     * Deterministic.
     */
   /** The planted-id offset [[syntheticImagesWithDups]] lays dups out
-    * with — exposed so measurement code (SweepImageAnn) derives ground
+    * with — exposed so measurement code (ScaleOpsSpec) derives ground
     * truth from THIS function instead of duplicating the formula (a
     * silent layout change would read ~0 recall, not fail).
     */

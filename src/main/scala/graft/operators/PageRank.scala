@@ -42,17 +42,10 @@ import org.apache.spark.storage.StorageLevel
   * the driver (N once, the dangling sum, the fingerprint).
   */
 object PageRank {
-  /** Rounds the last [[ranks]] call took (diagnostic, the
-    * ConnectedComponents.lastRounds convention).
+  /** Rounds the last [[ranks]] call took (diagnostic, read by
+    * PageRankSpec).
     */
   @volatile private[graft] var lastRounds: Int = 0
-
-  private def fingerprint(df: DataFrame): (Long, Long) = {
-    val r = df.agg(
-      count(lit(1)).as("n"),
-      coalesce(bit_xor(xxhash64(col("node"), col("pr"))), lit(0L)).as("x")).head()
-    (r.getLong(0), r.getLong(1))
-  }
 
   /** (node, pr) at the fixed point (or after `maxIterations`). `edges`
     * needs (src, dst); self-loops and duplicate edges count like any
@@ -78,7 +71,7 @@ object PageRank {
       var ranks = nodes
         .select(col("node"), round(lit(1.0 / n), snap).as("pr"))
         .localCheckpoint()
-      var fp = fingerprint(ranks)
+      var fp = Checkpoints.fingerprint(ranks, "node", "pr")
       var round_ = 0
       var converged = false
       while (!converged && round_ < maxIterations) {
@@ -100,7 +93,7 @@ object PageRank {
               lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
                 lit(dangling / n)), snap).as("pr"))
           .localCheckpoint()
-        val nextFp = fingerprint(next)
+        val nextFp = Checkpoints.fingerprint(next, "node", "pr")
         // digest gate (the ConnectedComponents rule): only run the exact
         // changed-row probe when the one-row digest says "maybe equal"
         converged = nextFp == fp && {

@@ -25,8 +25,8 @@ object Extra10 {
   /** The serving session — one per SparkContext, memoized so repeated
     * calls (bench sweeps) price steady-state serving from the LOADED
     * artifact rather than re-loading per call (the `_idx` min-of-2
-    * discipline; load-vs-rebuild is priced separately by
-    * [[graft.ProfileColdLoad]]). `newSession()` shares the context but
+    * discipline; load-vs-rebuild is priced by the `*_cold` rows).
+    * `newSession()` shares the context but
     * NOTHING session-scoped: the Graphs/SimIndexes caches key on
     * session identity, so the build session's entries are unreachable
     * from here — any served frame provably came off disk.

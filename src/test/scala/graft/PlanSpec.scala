@@ -453,6 +453,7 @@ class PlanSpec extends AnyFunSuite {
   import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
   import org.apache.spark.sql.execution.window.WindowExec
   import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
+  import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 
   /** Run the registered query and return every (action, finalized plan)
     * it executed. Listener delivery is async on the bus → poll to
@@ -1378,13 +1379,24 @@ class PlanSpec extends AnyFunSuite {
     // (16 total in plans/r19's before dump) must never come back.
     // Regression direction: any ENSURE_REQUIREMENTS exchange keyed on
     // the estimate value nc means a step re-shuffled its pre-count.
+    // The estimate column is matched as an attribute NAMED nc in the
+    // partitioning expressions, not as the substring "nc#" of their
+    // printed form; and some node must reference nc at all, so renaming
+    // the column cannot turn this gate vacuous.
     val nodes = executedPlans("graph_kcore").flatMap(p => flattenPlan(p._2))
+    def isNc(a: Attribute): Boolean = a.name == "nc"
+    assert(nodes.exists(_.references.exists(isNc)),
+      "no plan node references the estimate column nc — gate vacuous")
     val stepExchanges = nodes.collect {
       case e: ShuffleExchangeExec
-        if e.outputPartitioning.isInstanceOf[HashPartitioning] &&
-          e.shuffleOrigin.toString == "ENSURE_REQUIREMENTS" &&
-          e.outputPartitioning.asInstanceOf[HashPartitioning]
-            .expressions.exists(_.toString.contains("nc#")) => e
+        if e.shuffleOrigin.toString == "ENSURE_REQUIREMENTS" &&
+          (e.outputPartitioning match {
+            case h: HashPartitioning =>
+              h.expressions.exists(_.collectFirst {
+                case a: AttributeReference if isNc(a) => a
+              }.isDefined)
+            case _ => false
+          }) => e
     }
     assert(stepExchanges.isEmpty,
       s"h-index steps re-shuffle their pre-count again:\n${stepExchanges.mkString("\n")}")

@@ -88,4 +88,22 @@ class RegistrySpec extends AnyFunSuite {
     assert(surveyRows.size > 150,
       s"§2.3 parse found only ${surveyRows.size} rows — regex or format drift")
   }
+
+  test("select: an empty selection is the whole registry") {
+    assert(SparkEntry.select(Nil).keySet === SparkEntry.queries.keySet)
+  }
+
+  test("select: known names select exactly those rows") {
+    assert(SparkEntry.select(Seq("agg_pricing", "tpch_q5")).keySet ===
+      Set("agg_pricing", "tpch_q5"))
+  }
+
+  test("select: an unknown name throws and names every unknown") {
+    // a typo must fail the run, not shrink it to a "0 queries" success
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.select(Seq("agg_pricing", "tpch_q99", "agg_pricng"))
+    }
+    assert(e.getMessage.contains("agg_pricng, tpch_q99"), e.getMessage)
+    assert(!e.getMessage.contains("agg_pricing,"), e.getMessage)
+  }
 }

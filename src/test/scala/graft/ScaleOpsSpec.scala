@@ -1,8 +1,9 @@
 package graft
 
-import graft.operators.{Ann, Multimodal, MinHash, SimHash}
-import org.apache.spark.sql.SparkSession
+import graft.operators.{Ann, EmbedDedup, Multimodal, MinHash, SimHash}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Probabilistic scale-path operators vs their exact baselines on the
@@ -22,6 +23,72 @@ class ScaleOpsSpec extends AnyFunSuite {
   private def exactPairs = SparkEntry.queries("dedup_neardup")(spark, sf)
     .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** Canon-shaped synthetic corpus (doc_id, source, n_chars, text, ch) —
+    * the [[graft.queries.Extra7.canonDocs]] output contract. Every doc is
+    * `boiler` shared boilerplate tokens + 48 body tokens; 20% are
+    * TEMPLATE near-dups (50 templates, one body-token substitution keyed
+    * by replica — pairwise shingle Jaccard ≈ 0.77–0.8, above the 0.6
+    * threshold), the rest have globally unique bodies.
+    */
+  private def synthDocs(n: Int, boiler: Int): DataFrame = {
+    import spark.implicits._
+    spark.range(n.toLong).map { i =>
+      val bp = (0 until boiler).map(j => s"bp$j").mkString(" ")
+      val body =
+        if (i % 5 == 0) {
+          val t = (i / 5) % 50
+          val r = i / 250
+          val toks = Array.tabulate(48)(k => s"t${t}_$k")
+          toks((r % 46).toInt + 1) = s"u$i"
+          toks.mkString(" ")
+        } else Array.tabulate(48)(k => s"x${i}_$k").mkString(" ")
+      val text = if (bp.isEmpty) body else s"$bp $body"
+      (i, "synth", text.length, text)
+    }.toDF("doc_id", "source", "n_chars", "text")
+      .withColumn("ch", md5(col("text")))
+  }
+
+  /** Recall of an image→ANN retrieval on PLANTED near-dups at dial `n`:
+    * real rasters → [[Multimodal.extractFeatures]] (ImageIO decode +
+    * content feature) → `retrieve(queries, corpus, rows)`, which returns
+    * top-k (qid, vec_id) rows. Every 4th base image ships a re-encoded
+    * exact-content dup at id+off and a one-pixel-nudged near dup at
+    * id+2·off, so the ground truth is construction, not a quadratic
+    * brute-force pass; a dup query hits if its planted source id is in
+    * its top-k. Returns (exactRecall, nudgeRecall, rows, queries).
+    */
+  private def plantedImageRecall(n: Int)(
+      retrieve: (DataFrame, DataFrame, Long) => DataFrame)
+      : (Double, Double, Long, Long) = {
+    val off = Multimodal.dupOffset(n)
+    val feats = Multimodal
+      .extractFeatures(Multimodal.syntheticImagesWithDups(spark, n), dim = 32,
+        Multimodal.ImageIoCodec)
+      .select(col("media_id").as("vec_id"),
+        transform(col("embedding"), (x: Column) => x.cast("double")).as("e"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val rows = feats.count()
+      val queries = feats.filter(col("vec_id") >= off)
+      // base = qid − off (exact re-encode) or qid − 2·off (nudge)
+      val isExact = col("vec_id") < 2 * off
+      val expected = queries.select(col("vec_id").as("qid"),
+        when(isExact, col("vec_id") - off)
+          .otherwise(col("vec_id") - 2 * off).as("base"),
+        isExact.as("is_exact"))
+      val hits = retrieve(queries, feats, rows).join(expected, Seq("qid"))
+        .filter(col("vec_id") === col("base"))
+        .select(col("qid"), col("is_exact")).distinct()
+        .groupBy(col("is_exact")).agg(count(lit(1)).as("h"))
+        .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+      val nExact = queries.filter(isExact).count()
+      val nNudge = queries.count() - nExact
+      (hits.getOrElse(true, 0L).toDouble / math.max(1L, nExact),
+        hits.getOrElse(false, 0L).toDouble / math.max(1L, nNudge),
+        rows, nExact + nNudge)
+    } finally { feats.unpersist(false); () }
+  }
+
   test("large-star/small-star components equal min-label propagation") {
     import spark.implicits._
     import graft.operators.ConnectedComponents
@@ -39,6 +106,31 @@ class ScaleOpsSpec extends AnyFunSuite {
       .select(col("d1").as("src"), col("d2").as("dst"))
     assert(norm(ConnectedComponents.componentsStar(nd)) ===
       norm(ConnectedComponents.components(nd)))
+  }
+
+  test("connected components leave one checkpoint resident per call") {
+    import spark.implicits._
+    import graft.operators.ConnectedComponents
+    // two paths: hash-to-min needs one round per hop (31 here), large-
+    // star/small-star about log2(length) + 2 — both well past 5 rounds,
+    // each of which checkpoints its state
+    val edges = ((0L until 31L).map(i => (i, i + 1)) ++
+      (100L until 107L).map(i => (i, i + 1))).toDF("src", "dst")
+    val expected =
+      ((0L to 31L).map(_ -> 0L) ++ (100L to 107L).map(_ -> 100L)).toSet
+    def resident = spark.sparkContext.getPersistentRDDs.size
+    for ((name, cc) <- Seq[(String, () => DataFrame)](
+        "components" ->
+          (() => ConnectedComponents.components(edges, maxIterations = 40)),
+        "componentsStar" -> (() => ConnectedComponents.componentsStar(edges)))) {
+      val before = resident
+      val labels = cc()
+      val grown = resident - before
+      assert(grown <= 1, s"$name left $grown checkpoints resident")
+      // the one that stays is the one the result reads
+      assert(labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+        expected, name)
+    }
   }
 
   test("dedup_minhash_cluster equals the exact dedup_cluster labels") {
@@ -564,7 +656,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // bands (signature agreement as low as 9/64 where the estimator's
     // mean is ≈51/64). Near-identical driver fixtures (jac→1) could not
     // see it. This pins banding recall on the corpus that exposed it.
-    val canon = SweepPipeline.synthDocs(spark, 1000, boiler = 0)
+    val canon = synthDocs(1000, boiler = 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sh = graft.queries.Extra7.shinglesOf(canon)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -626,7 +718,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("lshTopKDial prices the serving path: guards, monotone tables, conservative model") {
-    import graft.operators.EmbedDedup
     // guards (round-14 ADVICE class: pricing APIs must not NaN silently)
     intercept[IllegalArgumentException](Ann.lshTopKPredictedRecall(1.5, 8, 4))
     intercept[IllegalArgumentException](Ann.lshTopKPredictedRecall(0.9, 0, 4))
@@ -675,14 +766,18 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("image→ANN retrieval recalls planted near-dups at the 4800-raster dial") {
     // The round-14 scale lane for the feature→ANN composition (the test
-    // above runs 30 rasters; SweepImageAnn measures decades to 48k+):
+    // above runs 30 rasters; PERF.md records decades to 48k+):
     // real ImageIO rasters → content features → lshTopK with the
     // production plane dial (autoPlanes). Planted ground truth: every
     // 4th base image ships an exact-content re-encode (identical
     // embedding — misses are pure ranking crowd-out) and a one-pixel
     // nudge (near-identical — also pays feature drift). Measured
     // 1.0/1.0 at this dial; the floors leave variance margin.
-    val (exactR, nudgeR, rows, nq) = SweepImageAnn.measure(spark, 4800)
+    val (exactR, nudgeR, rows, nq) = plantedImageRecall(4800) {
+      (queries, feats, n) =>
+        Ann.lshTopK(queries, feats, k = 5,
+          planesPerTable = EmbedDedup.autoPlanes(n), dim = 32, nprobe = 2)
+    }
     info(f"rows=$rows queries=$nq exactRecall=$exactR%.3f nudgeRecall=$nudgeR%.3f")
     assert(nq >= 2000, "planting produced too few dup queries — vacuous")
     assert(exactR >= 0.95, f"exact-content retrieval recall $exactR%.3f < 0.95")
@@ -697,8 +792,21 @@ class ScaleOpsSpec extends AnyFunSuite {
     // 0.9957/0.9963/0.9878, model conservative at every dial. Exact-dup
     // recall is structural: the collapse serves distance-0 mass from the
     // group hash-join at c=1.0, never from the candidate join.
-    val (exactR, nudgeR, rows, distinct, (planes, tables, _), predicted) =
-      SweepImageAnn.measureDialed(spark, 4800)
+    // the dial prices DISTINCT vectors — the collapse runs before the
+    // index, so exact-dup mass must not inflate the plane count
+    var distinct = 0L
+    var dial = (0, 0, 0)
+    val (exactR, nudgeR, rows, _) = plantedImageRecall(4800) {
+      (queries, feats, _) =>
+        distinct = feats.select(col("e")).distinct().count()
+        dial = Ann.lshTopKDial(distinct, 0.98, 0.95, targetBucket = 32)
+        val (planes, tables, nprobe) = dial
+        Ann.lshTopKGrouped(queries, feats, k = 5, tables = tables,
+          planesPerTable = planes, dim = 32, nprobe = nprobe,
+          maxBucketSize = 4000)
+    }
+    val (planes, tables, _) = dial
+    val predicted = Ann.lshTopKPredictedRecall(0.98, planes, tables)
     info(f"rows=$rows distinct=$distinct planes=$planes tables=$tables " +
       f"predicted=$predicted%.3f exact=$exactR%.3f nudge=$nudgeR%.3f")
     assert(distinct < rows, "no distance-0 mass collapsed — fixture drift")
